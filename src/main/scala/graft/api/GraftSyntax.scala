@@ -66,7 +66,7 @@ object syntax {
     } else Window.partitionBy(by.map(col): _*).orderBy(order: _*)
 
   /** Validated plain identifier — the guard before any splice into
-    * generated expression text (the TvfSql discipline). */
+    * generated expression text. */
   private def ident(s: String): String = {
     require("[A-Za-z_][A-Za-z0-9_]*".r.matches(s), s"not a plain identifier: '$s'")
     s
@@ -75,12 +75,18 @@ object syntax {
   private val offsetRe =
     "(?i)^([0-9]+)\\s*(s|sec|secs|second|seconds|min|t|minute|minutes|h|hr|hrs|hour|hours|d|day|days)$".r
 
+  /** The `date_trunc` units [[GraftDataFrameOps.resample]] accepts.
+    * `date_trunc` returns NULL for any other unit, which would put
+    * every row in one NULL bucket. */
+  private val calendarUnits = Set(
+    "year", "quarter", "month", "week", "day", "hour", "minute", "second")
+
   /** pandas-style OFFSET frequency ('15min', '5s', '2h', '1d') → µs
     * step, or None when `every` is a calendar unit for `date_trunc`
     * ('hour', 'week', 'month', …). Only day-dividing units are offsets
     * — weeks/months/quarters are irregular lattices and stay calendar
-    * units. Shared by [[GraftDataFrameOps.resample]] and the
-    * `resample` SQL TVF so both tiers accept the same spellings.
+    * units. Used by [[GraftDataFrameOps.resample]], which the
+    * `resample` SQL TVF calls, so both tiers accept the same spellings.
     *
     * The step must DIVIDE A DAY (86 400 s — admits '15min', '2h',
     * '1d'; rejects '7h', '2d', '90min'): the epoch-floor lattice
@@ -123,8 +129,8 @@ object syntax {
   /** Epoch-floor bucket of `c` at `stepMicros`: true FLOOR via
     * `x − pmod(x, step)` (pmod is non-negative, so pre-1970 instants
     * floor downward exactly like DuckDB `time_bucket`, where integer
-    * `div` would truncate toward zero). Shared by resample /
-    * upsampleFfill / the resample TVF. */
+    * `div` would truncate toward zero). Shared by resample and
+    * upsampleFfill. */
   private[graft] def floorBucket(c: Column, stepMicros: Long): Column =
     timestamp_micros(unix_micros(c) - pmod(unix_micros(c), lit(stepMicros)))
 
@@ -253,8 +259,8 @@ object syntax {
       * (non-empty buckets only, SQL semantics; see [[upsampleFfill]] for
       * gap filling). `every` accepts BOTH spellings (round-11 verdict
       * "missing" item 2):
-      *  - calendar units ('minute'|'hour'|'day'|'week'|'month'|…) →
-      *    `date_trunc` buckets;
+      *  - calendar units (year|quarter|month|week|day|hour|minute|second)
+      *    → `date_trunc` buckets; any other unit is rejected;
       *  - pandas OFFSET frequencies ('15min', '5s', '2h', '1d' — any
       *    day-dividing step) → epoch-floor buckets ([[floorBucket]]:
       *    x − pmod(x, step), a true floor), the same lattice as DuckDB
@@ -265,7 +271,11 @@ object syntax {
     def resample(every: String, tsCol: String, as: String)(aggs: Column*): DataFrame = {
       val bucket = offsetMicros(every) match {
         case Some(step) => syntax.floorBucket(col(tsCol), step)
-        case None       => date_trunc(every, col(tsCol))
+        case None =>
+          require(calendarUnits.contains(every.toLowerCase(java.util.Locale.ROOT)),
+            s"every must be a date_trunc unit (${calendarUnits.mkString("|")}) " +
+              s"or an offset frequency ('15min', '5s', …), got '$every'")
+          date_trunc(every, col(tsCol))
       }
       df.groupBy(bucket.as(as))
         .agg(aggs.head, aggs.tail: _*)

@@ -99,10 +99,8 @@ object DiskMemo {
   def ensure(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     readCached(spark, ensurePath(key)(build))
 
-  /** [[ensure]]'s artifact PATH — for consumers that splice the
-    * artifact into generated SQL (`parquet.\`path\``) instead of
-    * reading it through the DataFrame API (the TVF tier). */
-  def ensurePath(key: String)(build: => DataFrame): String = {
+  /** [[ensure]]'s artifact PATH, building it on the first call. */
+  private def ensurePath(key: String)(build: => DataFrame): String = {
     val dg = sha16(key)
     var path = built.get(dg)
     if (path == null) {
@@ -217,7 +215,8 @@ object DiskMemo {
     * frames return unchanged. */
   def persist(df: DataFrame, tag: String = ""): DataFrame = {
     if (df.isStreaming) return df
-    readCached(df.sparkSession, persistPath(df, tag).get)
+    readCached(df.sparkSession, ensurePath(
+      s"$tag|${df.schema.catalogString}|${planKey(df)}|${sourceStamp(df)}")(df))
   }
 
   /** Memoize a DERIVED frame keyed on its INPUT's construction
@@ -237,17 +236,6 @@ object DiskMemo {
     readCached(keyDf.sparkSession, ensurePath(
       s"derived|$tag|${keyDf.schema.catalogString}|${planKey(keyDf)}|${sourceStamp(keyDf)}")(
       build))
-  }
-
-  /** [[persist]]'s artifact PATH (None for streaming frames, which
-    * cannot materialize). Same plan-keyed digest as persist, so a TVF
-    * expansion that keys off the identical frame construction resolves
-    * to the artifact its DataFrame twin built — TVF tier artifact
-    * parity (round-14 verdict item 1). */
-  def persistPath(df: DataFrame, tag: String = ""): Option[String] = {
-    if (df.isStreaming) return None
-    Some(ensurePath(
-      s"$tag|${df.schema.catalogString}|${planKey(df)}|${sourceStamp(df)}")(df))
   }
 
   /** Forget every memo entry (artifacts are overwritten on rebuild, so

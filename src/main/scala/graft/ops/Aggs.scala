@@ -2059,11 +2059,7 @@ object Aggs {
               |  round((r_vh - r_vw * r_hw) / sqrt((1.0 - r_vw * r_vw) * (1.0 - r_hw * r_hw)), 4) AS partial_value_hour
               |FROM r ORDER BY event_type""".stripMargin),
     ),
-    // The SAME fit STRAIGHT FROM SQL TEXT through the `ols_fit` TVF
-    // (GraftExtensions) — the analytics tier's SQL entry, mirroring
-    // resample/sessionize/latest_by/simhash_pairs: identical exact
-    // moments + shared det3 text, so this green row proves SQL tier ≡
-    // DataFrame tier ≡ DuckDB truth.
+    // SQL twin: the `ols_fit` TVF calls Aggs.olsNormalEqOf.
     OpSpec(
       "agg_ols_tvf",
       (s, d) => {

@@ -176,27 +176,12 @@ object CurationOps {
       "cur_kgp")
 
   /** The distinct (doc_id, x) k-gram presence frame — [[kgPositionsOf]]
-    * minus positions — built ONCE per (corpus, k) and disk-memoized:
-    * shared by dedup_substring_exact, dedup_substring_survivors AND
-    * (since round 15) the `substring_pairs` TVF expansion, which reads
-    * the artifact path ([[kgDistinctPath]]) instead of re-running the
-    * digest pipeline per call (round-14 verdict item 1: the TVF's
-    * recompute cost 21.5 s vs 6.0 s at sf3). */
+    * minus positions — shared by dedup_substring_exact,
+    * dedup_substring_survivors and the `substring_pairs` TVF through
+    * [[substringDupsOf]]'s disk memo. */
   private def kgDistinctFrame(df: DataFrame, idCol: String, textCol: String,
                               k: Int): DataFrame =
     kgPositionsOf(df, idCol, textCol, k).select("doc_id", "x").distinct()
-
-  /** Artifact path of [[kgDistinctFrame]]'s memo — the `substring_pairs`
-    * TVF splices this into its expansion as a `parquet.` scan. Building
-    * is eager on first call (same honest accounting as the DataFrame
-    * tier, where the first family member pays the digest build); None
-    * only for streaming input. */
-  private[graft] def kgDistinctPath(df: DataFrame, idCol: String,
-                                    textCol: String, k: Int): Option[String] = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    graft.core.DiskMemo.persistPath(
-      kgDistinctFrame(df, idCol, textCol, k), "cur_kg")
-  }
 
   def substringDupsOf(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 10, maxDf: Int = 50): DataFrame = {
@@ -305,9 +290,7 @@ object CurationOps {
              |  FROM t)
              |WHERE cum_tok <= 1500 ORDER BY source, doc_id""".stripMargin),
     ),
-    // SQL twin of sample_token_budget via the token_budget_sample TVF
-    // (GraftExtensions) — same oracle text, so SQL tier ≡ DataFrame
-    // tier ≡ DuckDB truth.
+    // SQL twin: the `token_budget_sample` TVF calls CurationOps.tokenBudgetSampleOf.
     OpSpec(
       "sample_token_budget_tvf",
       (s, d) => {
@@ -406,14 +389,7 @@ object CurationOps {
              |WHERE a.x IN (SELECT x FROM f WHERE nd BETWEEN 2 AND 50)
              |GROUP BY 1, 2 ORDER BY a, b""".stripMargin),
     ),
-    // The SAME substring pair mining STRAIGHT FROM SQL TEXT through
-    // the `substring_pairs` TVF (GraftExtensions) — the family's SQL
-    // tier, mirroring simhash_pairs. Since round 15 the expansion
-    // reads the SAME DiskMemo distinct-digest artifact the DataFrame
-    // twin reads (kgDistinctPath — round-14 verdict item 1: no digest
-    // pipeline in the expansion, just the artifact scan + in-group
-    // pair explode). Green row + the shared oracle prove SQL tier ≡
-    // DataFrame tier ≡ truth.
+    // SQL twin: the `substring_pairs` TVF calls CurationOps.substringDupsOf.
     OpSpec(
       "dedup_substring_tvf",
       (s, d) => {

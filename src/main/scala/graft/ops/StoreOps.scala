@@ -82,11 +82,7 @@ object StoreOps {
               |  count(*) AS n_versions
               |FROM store GROUP BY user_id ORDER BY user_id""".stripMargin),
     ),
-    // The SAME upsert-on-read STRAIGHT FROM SQL TEXT through the
-    // `latest_by` table-valued function — the store family's SQL tier,
-    // mirroring resample/sessionize/simhash_pairs/asof_join. Expands
-    // to the identical one-hash-agg plan as TsdbStore.latestByKey, so
-    // this green row proves SQL tier ≡ DataFrame tier ≡ oracle.
+    // SQL twin: the `latest_by` TVF calls TsdbStore.latestByKey.
     OpSpec(
       "store_upsert_tvf",
       (s, d) => {

@@ -119,10 +119,7 @@ object TimeSeries {
              |  cast(sum(cast(value as decimal(18,2))) as double) AS sum_value
              |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin),
     ),
-    // The SAME anchored resample STRAIGHT FROM SQL TEXT — the
-    // `resample` TVF's optional 5th (origin) argument; expands to the
-    // identical pmod-floor lattice via the shared offsetMicrosRaw
-    // parser, so SQL tier ≡ DataFrame tier ≡ time_bucket-origin truth.
+    // SQL twin: the `resample` TVF with an origin calls api.resampleOrigin.
     OpSpec(
       "ts_resample_origin_tvf",
       (s, d) => {
@@ -559,11 +556,7 @@ object TimeSeries {
              |FROM sess GROUP BY user_id, session_id
              |ORDER BY user_id, session_id""".stripMargin),
     ),
-    // The hourly resample STRAIGHT FROM SQL TEXT through the `resample`
-    // table-valued function (GraftExtensions, round-11 verdict item 3)
-    // — gates the SQL surface of the recipe, not just the DataFrame/
-    // api.syntax forms. The TVF expands to a parsed date_trunc hash-agg
-    // plan, so Catalyst sees ordinary SQL (partial+final agg, codegen).
+    // SQL twin: the `resample` TVF calls api.resample.
     OpSpec(
       "ts_resample_tvf",
       (s, d) => {
@@ -575,10 +568,7 @@ object TimeSeries {
              |  cast(sum(cast(value as decimal(18,2))) as double) AS sum_value
              |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin),
     ),
-    // The 15-MINUTE resample through the SQL TVF — the offset-frequency
-    // spelling reaching the SQL tier (the TVF shares api.syntax's
-    // offsetMicros parser, so SQL and DataFrame tiers accept identical
-    // forms and plan the identical epoch-floor hash agg).
+    // SQL twin, offset frequency: the `resample` TVF calls api.resample.
     OpSpec(
       "ts_resample_tvf15",
       (s, d) => {
@@ -591,12 +581,7 @@ object TimeSeries {
              |  cast(sum(cast(value as decimal(18,2))) as double) AS sum_value
              |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin),
     ),
-    // Gap sessionization from SQL text via the `sessionize` TVF — the
-    // SQL twin of ts_sessionize (same lag + cumulative-flag-sum plan,
-    // reached through GraftExtensions instead of api.syntax). The TVF
-    // returns per-event rows + session_id; the per-session aggregate on
-    // top is deliberately the ts_sessionize shape so the two queries'
-    // oracles stay textually identical.
+    // SQL twin: the `sessionize` TVF calls api.sessionize.
     OpSpec(
       "ts_sessionize_tvf",
       (s, d) => {

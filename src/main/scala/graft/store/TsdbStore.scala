@@ -125,11 +125,6 @@ object TsdbStore {
     * retained days are untouched. Returns the number of partitions
     * dropped. */
   def expirePartitions(path: String, keepFrom: java.sql.Date): Int = {
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(): Unit
-    }
     val dirs = Option(new java.io.File(path).listFiles)
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
@@ -153,14 +148,18 @@ object TsdbStore {
     * agg keys on (hour, event_type): upstream partition pruning on the
     * raw scan composes (roll up only the days you need). */
   def rollupHourly(spark: SparkSession, srcPath: String, dstPath: String,
-                   tsCol: String, byCol: String, valueCol: String): Unit = {
-    val rolled = read(spark, srcPath)
-      .groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
+                   tsCol: String, byCol: String, valueCol: String): Unit =
+    writeDayPartitioned(
+      hourly(read(spark, srcPath), tsCol, byCol, valueCol), "hour_ts", dstPath)
+
+  /** The rollup aggregate: (hour_ts, by, n, sum_<value>) with the
+    * value summed as exact decimal(18,2). */
+  private def hourly(df: DataFrame, tsCol: String, byCol: String,
+                     valueCol: String): DataFrame =
+    df.groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
       .agg(count(lit(1)).as("n"),
         sum(col(valueCol).cast("decimal(18,2)")).cast("double")
           .as(s"sum_$valueCol"))
-    writeDayPartitioned(rolled, "hour_ts", dstPath)
-  }
 
   /** INCREMENTAL rollup refresh — the continuous-aggregate maintenance
     * job: recompute ONLY the day partitions `batch` touched and
@@ -177,12 +176,10 @@ object TsdbStore {
     val days = batch.select(to_date(col(tsCol)).as("event_date"))
       .distinct().collect().map(_.getDate(0))
     if (days.isEmpty) return
-    val rolled = read(spark, srcPath)
-      .filter(col("event_date").isin(days.toIndexedSeq: _*)) // partition-pruned
-      .groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
-      .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,2)")).cast("double")
-          .as(s"sum_$valueCol"))
+    val rolled = hourly(
+      read(spark, srcPath)
+        .filter(col("event_date").isin(days.toIndexedSeq: _*)), // partition-pruned
+      tsCol, byCol, valueCol)
     // WRITER-scoped dynamic overwrite: the per-write option takes
     // precedence over the session conf, so no session-global
     // set/restore — a concurrent partitioned overwrite on the same
@@ -278,6 +275,11 @@ object TsdbStore {
   // share a hash bin — the DiskMemo.ensure fix applied here. Build
   // dependencies form a DAG, so lock order is consistent (no deadlock).
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Build once per key: `build` gets an EMPTY directory path. A rebuild
+    * after [[clearMemo]] reuses the same path, so whatever an earlier
+    * build left there (an appended update batch above all) is deleted
+    * first rather than built on top of. */
   private def ensureBuilt(key: String)(build: String => Unit): String = {
     val dg = sha16(key)
     var path = built.get(dg)
@@ -285,8 +287,10 @@ object TsdbStore {
       buildLocks.computeIfAbsent(dg, _ => new Object).synchronized {
         path = built.get(dg)
         if (path == null) {
-          val p = new java.io.File(
-            sys.props("java.io.tmpdir"), s"graft_store_${jvmUid}_$dg").getAbsolutePath
+          val dir = new java.io.File(
+            sys.props("java.io.tmpdir"), s"graft_store_${jvmUid}_$dg")
+          deleteRec(dir)
+          val p = dir.getAbsolutePath
           build(p)
           built.put(dg, p)
           path = p
@@ -307,24 +311,26 @@ object TsdbStore {
     * the copyRec device ensureRetainedStore already uses. */
   private def ensureBaseStore(spark: SparkSession, sfDir: String): String =
     ensureBuilt(s"base|$sfDir ${stamp(sfDir)}") { path =>
-      // STORE INVARIANT, enforced at load: (user_id, ts) — the upsert
-      // key — is non-null. The day-profile/vacuum grid rewrites count
-      // pre-agg rows where the oracle counts DISTINCT user_id; a NULL
-      // would form a grid row countDistinct excludes, silently
-      // breaking oracle exactness on a future corpus. raise_error
-      // rides the existing write pass — no extra scan.
+      // STORE INVARIANTS, enforced at load:
+      //  - (user_id, ts) — the upsert key — is non-null. The
+      //    day-profile/vacuum grid rewrites count pre-agg rows where the
+      //    oracle counts DISTINCT user_id; a NULL would form a grid row
+      //    countDistinct excludes, silently breaking oracle exactness;
+      //  - every base event_id is below versionOffset, so the update
+      //    batch's ids stay unique and above the base, and
+      //    `event_id < versionOffset` selects exactly the base load.
+      // raise_error rides the existing write pass — no extra scan.
       val events = graft.core.Tables.events(spark, sfDir)
         .withColumn("user_id", expr(
-          "if(user_id IS NULL OR ts IS NULL, " +
-            "raise_error('events store invariant violated: NULL user_id/ts'), user_id)"))
+          s"if(user_id IS NULL OR ts IS NULL OR event_id >= $versionOffset, " +
+            "raise_error('events store invariant violated: NULL user_id/ts " +
+            s"or event_id >= $versionOffset'), user_id)"))
       writeDayPartitioned(events, "ts", path)
     }
 
   /** Build (once per JVM+corpus) the gate's events store under
     * java.io.tmpdir: bulk load (copied from [[ensureBaseStore]]) +
-    * appended update batch. Returns the store path. Idempotent:
-    * overwrite-then-append, so a rebuild after corpus regen yields
-    * byte-equivalent content. */
+    * appended update batch. Returns the store path. */
   def ensureEventsStore(spark: SparkSession, sfDir: String): String =
     ensureBuilt(s"events|$sfDir ${stamp(sfDir)}") { path =>
       copyRec(new java.io.File(ensureBaseStore(spark, sfDir)),
@@ -347,6 +353,12 @@ object TsdbStore {
     * its oracle (the store holds 2024-01-01..30, so 15 days expire). */
   private[graft] val retentionCutoff: java.sql.Date =
     java.sql.Date.valueOf("2024-01-15")
+
+  private def deleteRec(f: java.io.File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
+    f.delete(): Unit
+  }
 
   private def copyRec(src: java.io.File, dst: java.io.File): Unit = {
     if (src.isDirectory) {
@@ -410,11 +422,7 @@ object TsdbStore {
       val src = ensureEventsStore(spark, sfDir)
       val events = graft.core.Tables.events(spark, sfDir)
       val baseOnly = read(spark, src).filter(col("event_id") < versionOffset)
-      val v1 = baseOnly
-        .groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      writeDayPartitioned(v1, "hour_ts", dst)
+      writeDayPartitioned(hourly(baseOnly, "ts", "event_type", "value"), "hour_ts", dst)
       rollupRefreshDays(spark, src, dst, updateBatch(events), "ts", "event_type", "value")
     }
 
@@ -435,7 +443,9 @@ object TsdbStore {
         updateBatch(events).withColumn("batch_tag", lit("u1")), "ts", dst)
     }
 
-  /** Forget memoized store paths (graft.core.Caches). Rebuilds are
-    * idempotent overwrites, so clearing is always safe. */
+  /** Forget memoized store paths (graft.core.Caches). The next
+    * ensure* call rebuilds its store from an emptied directory (see
+    * [[ensureBuilt]]), so a frame still reading an old store path must
+    * not be used after clearing. */
   private[graft] def clearMemo(s: SparkSession): Unit = built.clear()
 }

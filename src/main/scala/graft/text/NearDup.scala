@@ -3,6 +3,7 @@ package graft.text
 import graft.core.{Tables => T}
 import graft.ops.OpSpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection family: exact n-gram Jaccard, MinHash+LSH
@@ -661,16 +662,7 @@ object NearDup {
               |WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
               |ORDER BY a, b""".stripMargin),
     ),
-    // The SAME Hamming≤2 retrieval STRAIGHT FROM SQL TEXT through the
-    // `simhash_pairs` table-valued function (GraftExtensions) — gates
-    // the dedup family's SQL tier the way join_asof_tvf gates the
-    // as-of operator's. The TVF expands to the pigeonhole blocking via
-    // the shared partBounds split; since round 15 it reads the SAME
-    // DiskMemo sketch artifact the DataFrame twins read (simhashPath —
-    // round-14 verdict item 1: no sketch agg in the expansion at all,
-    // just the artifact scan + per-bucket in-group pair explode) — so
-    // this green row + the all-pairs oracle prove SQL tier ≡ DataFrame
-    // tier ≡ truth.
+    // SQL twin: the `simhash_pairs` TVF calls NearDup.simhashPairs.
     OpSpec(
       "dedup_simhash_pairs_tvf",
       (s, d) => {
@@ -892,24 +884,9 @@ object NearDup {
     graft.core.DiskMemo.persist(
       simhashOf(T.documents(s, d), "doc_id", "text", bits = 60), "nd_sk")
 
-  /** Artifact path of the (doc_id, simhash) sketch memo for ARBITRARY
-    * input — the `simhash_pairs` TVF splices this into its expansion
-    * as a `parquet.` scan, so the SQL tier reads the SAME artifact the
-    * DataFrame twins read instead of re-running the token-explode +
-    * `bits`-column sketch agg per call (round-14 verdict item 1).
-    * Plan-keyed like [[simhashPairs]]'s persist — identical (docs,
-    * bits) constructions resolve to one artifact. None only for
-    * streaming input. */
-  private[graft] def simhashPath(docs: DataFrame, idCol: String,
-                                 textCol: String, bits: Int): Option[String] =
-    graft.core.DiskMemo.persistPath(
-      simhashOf(docs, idCol, textCol, bits), "nd_sk")
-
   /** Even `parts`-way split points of a `bits`-wide sketch (first
-    * `bits % parts` parts take the extra bit): (lo, hi) bit ranges.
-    * Shared with the `simhash_pairs` TVF so the SQL tier blocks on the
-    * exact same split as the DataFrame plan. */
-  private[graft] def partBounds(bits: Int, parts: Int): Seq[(Int, Int)] = {
+    * `bits % parts` parts take the extra bit): (lo, hi) bit ranges. */
+  private def partBounds(bits: Int, parts: Int): Seq[(Int, Int)] = {
     val base = bits / parts
     val rem = bits % parts
     val sizes = Seq.tabulate(parts)(i => base + (if (i < rem) 1 else 0))
@@ -974,12 +951,23 @@ object NearDup {
     *  - `"bitflip"` (maxDist = 1 only): emit the sketch plus all
     *    `bits` one-bit flips and equi-join unflipped sketches — the
     *    nprobe XOR device (bits+1 rows/doc; C(bits, d) probes for
-    *    d ≥ 2 is why pigeonhole exists). */
+    *    d ≥ 2 is why pigeonhole exists).
+    *
+    * `maxDf` (pigeonhole only) drops every (pid, pv) bucket holding
+    * more than `maxDf` docs before the pair join. The default keeps
+    * every bucket, which is what makes the blocking lossless; a cap
+    * bounds the Θ(|bucket|²) pair mass a boilerplate-heavy corpus puts
+    * on one hot bucket, at the price of missing the pairs that only
+    * that bucket would have found. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    bits: Int = 60, maxDist: Int = 2,
-                   blocking: String = "pigeonhole"): DataFrame = {
+                   blocking: String = "pigeonhole",
+                   maxDf: Int = Int.MaxValue): DataFrame = {
     require(maxDist >= 1 && maxDist < bits,
       s"maxDist must be in [1, bits), got $maxDist")
+    require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
+    require(maxDf == Int.MaxValue || blocking == "pigeonhole",
+      s"maxDf caps pigeonhole buckets only, got blocking '$blocking'")
     // one int64/doc; feeds both join sides. Disk-memoized: identical
     // (docs, bits) constructions — every gated simhash query — share
     // one eviction-proof artifact; streaming frames pass through.
@@ -1000,8 +988,8 @@ object NearDup {
             expr("bit_count(sa ^ bucket2)").cast("bigint").as("hamming"))
       case "pigeonhole" =>
         val parts = partBounds(bits, maxDist + 1)
-        def parted(idC: String, shC: String) =
-          sh.select(col("doc_id").as(idC), col("simhash").as(shC),
+        def parted(idC: String, shC: String) = {
+          val all = sh.select(col("doc_id").as(idC), col("simhash").as(shC),
               explode(array(parts.zipWithIndex.map { case ((lo, hi), pid) =>
                 struct(lit(pid).as("pid"),
                   shiftright(col("simhash"), lo)
@@ -1009,6 +997,11 @@ object NearDup {
               }: _*)).as("p"))
             .select(col(idC), col(shC),
               col("p.pid").as("pid"), col("p.pv").as("pv"))
+          if (maxDf == Int.MaxValue) all
+          else all
+            .withColumn("_df", count(lit(1)).over(Window.partitionBy("pid", "pv")))
+            .filter(col("_df") <= maxDf).drop("_df")
+        }
         parted("a", "sa")
           .join(parted("b", "sb"), Seq("pid", "pv"))
           .filter(col("a") < col("b"))

@@ -34,7 +34,7 @@ object TextOps {
   // Parameterized text-metric API (round 11) — arbitrary columns and
   // thresholds; the graft.api entry points and the thin bodies behind
   // the gated text_* queries. Identifier args that reach generated
-  // expression text are validated first (the TvfSql discipline).
+  // expression text are validated first.
   // ----------------------------------------------------------------
 
   private val identRe = "[A-Za-z_][A-Za-z0-9_]*".r

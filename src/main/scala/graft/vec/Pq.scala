@@ -39,9 +39,9 @@ object Pq {
   type Books = Array[Array[Array[Double]]]
 
   /** Plain-identifier guard before any caller-supplied column name is
-    * spliced into generated expression text (the TvfSql discipline —
-    * an unusual name would otherwise fail with a confusing parse error
-    * or, worse, alter the generated expression). */
+    * spliced into generated expression text (an unusual name would
+    * otherwise fail with a confusing parse error or, worse, alter the
+    * generated expression). */
   private def ident(s: String): String = {
     require("[A-Za-z_][A-Za-z0-9_]*".r.matches(s),
       s"not a plain identifier: '$s'")

@@ -36,7 +36,7 @@ object VecOps {
     expr(s"exists(${ident(eCol)}, x -> x != 0D)")
 
   /** Plain-identifier guard before splicing a caller-supplied column
-    * name into generated expression text (the TvfSql discipline). */
+    * name into generated expression text. */
   private def ident(s: String): String = {
     require("[A-Za-z_][A-Za-z0-9_]*".r.matches(s),
       s"not a plain identifier: '$s'")

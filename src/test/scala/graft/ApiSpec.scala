@@ -679,6 +679,16 @@ class ApiSpec extends AnyFunSuite {
     assert(q.forall(_ % 900L == 0))
   }
 
+  test("resample rejects a unit that is neither a date_trunc unit nor an offset") {
+    val df = Seq((java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 1.0)).toDF("ts", "value")
+    // date_trunc('fortnight', ts) is NULL: every row would land in one NULL bucket
+    assertThrows[IllegalArgumentException](
+      df.resample("fortnight", "ts", "b")(count(lit(1)).as("n")))
+    // the eight calendar units stay accepted, in any case
+    for (u <- Seq("year", "quarter", "month", "week", "day", "hour", "minute", "SECOND"))
+      assert(df.resample(u, "ts", "b")(count(lit(1)).as("n")).count() == 1L, u)
+  }
+
   test("offsetMicros rejects non-day-dividing steps (lattice-divergence guard)") {
     import graft.api.syntax.offsetMicros
     // '7h'/'2d'/'7s' epoch-floor lattices diverge from DuckDB

@@ -28,6 +28,28 @@ class StoreSpec extends AnyFunSuite {
     assert(updates > 0, "fixture must contain at least one update version")
   }
 
+  test("a store rebuilt after clearMemo holds the update batch once") {
+    val first = TsdbStore.read(spark,
+      TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke)).count()
+    TsdbStore.clearMemo(spark)
+    val again = TsdbStore.read(spark,
+      TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke)).count()
+    assert(again === first)
+    assert(again === events.count() + TsdbStore.updateBatch(events).count())
+  }
+
+  test("the store build rejects a base event_id at or above the version offset") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_ids").toFile
+    Seq((10000000L, 1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0, "view"))
+      .toDF("event_id", "user_id", "ts", "value", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    val e = intercept[Exception](TsdbStore.ensureEventsStore(spark, dir.getAbsolutePath))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(_.contains("events store invariant violated")), messages)
+  }
+
   test("latestByKey resolves appended versions: bumped value wins per updated key") {
     val path = TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke)
     val latest = TsdbStore.latestByKey(

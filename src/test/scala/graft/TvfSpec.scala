@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL-surface tier for the recipe families (GraftExtensions `resample`
-  * and `sessionize` TVFs, round-11 verdict item 3): equivalence to the
-  * graft.api DataFrame forms, plan shape, and the strict argument
-  * validation that guards the text-splice expansion. */
+/** SQL-surface tier (the GraftExtensions table functions): each TVF
+  * calls a graft API operator, so its results and its plan equal the
+  * DataFrame form's; bad arguments fail before anything runs. */
 class TvfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import graft.api.syntax._
@@ -240,5 +239,65 @@ class TvfSpec extends AnyFunSuite {
         "SELECT * FROM simhash_pairs('tvf_spec_docs_val', 'doc_id', 'text', 60, 0)",
         "SELECT * FROM simhash_pairs('tvf_spec_docs_val', 'doc_id', 'text', 8, 8)"))
       assertThrows[Exception](spark.sql(bad).collect())
+  }
+
+  test("each delegated TVF plans exactly like the API operator it calls") {
+    import spark.implicits._
+    val ev = events
+    ev.createOrReplaceTempView("tvf_par_ev")
+    val sessEv = ev.filter(col("user_id") < 5)
+    sessEv.createOrReplaceTempView("tvf_par_sess")
+    val docs = graft.core.Tables.documents(spark, TestSpark.sfSmoke)
+    docs.createOrReplaceTempView("tvf_par_docs")
+    val store = graft.store.TsdbStore.read(spark,
+      graft.store.TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke))
+    store.createOrReplaceTempView("tvf_par_store")
+    val olsIn = Seq(("a", 0L, 0L, 1.0), ("a", 1L, 2L, 3.5), ("a", 2L, 1L, 4.25),
+      ("a", 3L, 3L, 8.0), ("b", 0L, 1L, 2.0), ("b", 1L, 0L, 1.5),
+      ("b", 2L, 2L, 6.75), ("b", 4L, 1L, 7.0)).toDF("grp", "u", "w", "yv")
+    olsIn.createOrReplaceTempView("tvf_par_ols")
+    val aggs = Seq(count(lit(1)).as("n"),
+      sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+    val cases = Seq(
+      "resample('tvf_par_ev', 'ts', 'hour', 'value')" ->
+        ev.resample("hour", "ts", "bucket")(aggs: _*),
+      "resample('tvf_par_ev', 'ts', '15min', 'value')" ->
+        ev.resample("15min", "ts", "bucket")(aggs: _*),
+      "resample('tvf_par_ev', 'ts', '7h', 'value', '2024-01-01 00:00:00')" ->
+        ev.resampleOrigin("7h", java.time.LocalDateTime.of(2024, 1, 1, 0, 0),
+          "ts", "bucket")(aggs: _*),
+      "sessionize('tvf_par_sess', 'ts', 'event_id', 'user_id', 1800000000)" ->
+        sessEv.sessionize(1800000000L, "ts", "event_id", Seq("user_id")),
+      "simhash_pairs('tvf_par_docs', 'doc_id', 'text', 24, 3)" ->
+        graft.text.NearDup.simhashPairs(docs, "doc_id", "text", bits = 24, maxDist = 3),
+      "simhash_pairs('tvf_par_docs', 'doc_id', 'text', 24, 3, 5)" ->
+        graft.text.NearDup.simhashPairs(docs, "doc_id", "text", bits = 24,
+          maxDist = 3, maxDf = 5),
+      "substring_pairs('tvf_par_docs', 'doc_id', 'text', 5, 10)" ->
+        graft.ops.CurationOps.substringDupsOf(docs, "doc_id", "text", k = 5, maxDf = 10),
+      "token_budget_sample('tvf_par_docs', 'source', 'doc_id', 'text', 1500)" ->
+        graft.ops.CurationOps.tokenBudgetSampleOf(docs, "source", "doc_id", "text", 1500L),
+      "latest_by('tvf_par_store', 'user_id', 'event_id', 'value')" ->
+        graft.store.TsdbStore.latestByKey(store, Seq("user_id"), "event_id", Seq("value")),
+      "ols_fit('tvf_par_ols', 'grp', 'u', 'w', 'yv')" ->
+        graft.ops.Aggs.olsNormalEqOf(olsIn, "grp", "u", "w", "yv"))
+    for ((call, api) <- cases) {
+      val viaSql = spark.sql(s"SELECT * FROM $call").queryExecution.optimizedPlan
+      val viaApi = api.queryExecution.optimizedPlan
+      assert(viaSql.sameResult(viaApi), s"$call\n--- sql ---\n$viaSql\n--- api ---\n$viaApi")
+    }
+  }
+
+  test("one query may call the same TVF twice (self-join of TVF outputs)") {
+    events.createOrReplaceTempView("tvf_spec_twice")
+    val single = spark.sql(
+      "SELECT * FROM resample('tvf_spec_twice', 'ts', 'hour', 'value')").count()
+    val joined = spark.sql(
+      """SELECT x.bucket, x.n AS nx, y.n AS ny
+        |FROM resample('tvf_spec_twice', 'ts', 'hour', 'value') x
+        |JOIN resample('tvf_spec_twice', 'ts', 'hour', 'value') y
+        |  ON x.bucket = y.bucket""".stripMargin).collect()
+    assert(single > 0 && joined.length == single)
+    assert(joined.forall(r => r.getLong(1) == r.getLong(2)))
   }
 }
